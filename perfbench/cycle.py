@@ -8,6 +8,7 @@ inputs (row density and where late rows land), see README.md.
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import random
@@ -44,6 +45,8 @@ HORIZON_S = HORIZON_DAYS * DAY
 LATE_SHARE = 0.01  # share of the rows inside the late window held out of the base
 LATE_KEYS = 64  # late rows carry a key in [0, LATE_KEYS); batch i takes key % B == i
 SECONDS_PER_BATCH = 6  # --seconds / this = number of late batches (at least 3)
+MIN_BATCHES = 3
+SHORT_READS = 4  # short range reads after each refresh
 RETAIN_FROM_DAY = 1  # retention drops day 0 of the 1m tier ...
 DOWNSAMPLE_BEFORE_DAY = 2  # ... and downsampling thins the days left before day 2 ...
 DOWNSAMPLE_POINTS = 64  # ... to this many points per source and day
@@ -60,13 +63,14 @@ WORKLOADS = {
     # so the span kernel fills most 1m points; late rows land in the last 2 days
     "sparse_recent": Workload(rows=72_000, late_days=2),
     # twice the rows, so scan and rollup carry more and fewer points are
-    # filled; late rows land anywhere, so every refresh rewrites every day
-    "dense_backfill": Workload(rows=144_000, late_days=HORIZON_DAYS),
+    # filled; late rows land in the last 3 days, so every refresh rewrites
+    # 3 of the 4 day partitions
+    "dense_backfill": Workload(rows=144_000, late_days=3),
 }
 
 
 def n_batches(seconds: int) -> int:
-    return max(3, seconds // SECONDS_PER_BATCH)
+    return max(MIN_BATCHES, seconds // SECONDS_PER_BATCH)
 
 
 # ---------------------------------------------------------------------------
@@ -159,11 +163,18 @@ def _parquet_files(path: str) -> list[str]:
     ]
 
 
+def _first_half() -> F.Column:
+    """Rows of the first half of the sources: a tier's first append."""
+    return F.col("source") < F.lit(f"s{SOURCES // 2:03d}")
+
+
 def unpersist(tiers: dict) -> None:
+    """Drop the cached tiers and wait until their blocks are freed, so the
+    freeing does not overlap the next timed operation."""
     for d in tiers.values():
         for key in ("rollup", "fused", "closure"):
             if key in d:
-                d[key].unpersist()
+                d[key].unpersist(blocking=True)
 
 
 # ---------------------------------------------------------------------------
@@ -176,6 +187,7 @@ class Run:
     """One benchmark run's state and everything it measured."""
 
     spark: SparkSession
+    workload: Workload
     fixture: str
     store: str  # directory the tier tables live in
     seed: int
@@ -202,10 +214,15 @@ class Run:
 
     # -- pipeline ---------------------------------------------------------
 
-    def pipeline(self) -> tuple[dict, int, float, float]:
+    def pipeline(self) -> tuple[dict, int]:
         """The flagship tier pipeline with its closure leg, materialized as
-        ``bench.run_flagship`` does. Returns (tiers, rolled-up points, wall
-        without the closure job, wall with it)."""
+        ``bench.run_flagship`` does. Records its wall without the closure job
+        and with it; returns the (persisted) tiers and the rolled-up
+        points. The JVM and this process collect their garbage first, so a
+        collection left over from earlier operations does not land in the
+        timed iteration."""
+        gc.collect()
+        self.spark.sparkContext._jvm.System.gc()
         t0 = time.perf_counter()
         tiers = run_tiers(
             self.tokens, with_eigen=True, with_chunks=True, persist=True,
@@ -218,8 +235,9 @@ class Run:
         t1 = time.perf_counter()
         _noop(_union(d["closure"] for d in tiers.values()))
         t2 = time.perf_counter()
+        self.m.update(iteration_s=t1 - t0, iteration_closure_s=t2 - t0)
         self.attempted += 1
-        return tiers, points, t1 - t0, t2 - t0
+        return tiers, points
 
     def traced_pipeline(self) -> tuple[dict, int]:
         """The same pipeline with every layer boundary persisted and counted
@@ -266,11 +284,17 @@ class Run:
     # -- tier store -------------------------------------------------------
 
     def write(self, tiers: dict, points: int) -> None:
-        """Write the three tier tables and the chunk table (one timed op)."""
+        """Write the three tier tables and the chunk table (one timed op).
+        The 1m tier arrives as two appends, one per half of the sources, as
+        a stream of micro-batches would leave it: every day holds files of
+        both, and the days no refresh rewrites are left for compaction."""
         tr = self.tracer
         t0 = time.perf_counter()
         with tr.span("sources.tables.write_tier"):
-            for tier in TIERS:
+            roll_1m = tiers["1m"]["rollup"]
+            write_tier(roll_1m.filter(_first_half()), self.paths["1m"], "1m")
+            write_tier(roll_1m.filter(~_first_half()), self.paths["1m"], "1m", mode="append")
+            for tier in ("1h", "1d"):
                 write_tier(tiers[tier]["rollup"], self.paths[tier], tier)
         with tr.span("operators.compress.write_chunks"):
             _union(
@@ -289,20 +313,17 @@ class Run:
         )
 
     def _read_plan(self) -> list[list[tuple]]:
-        """Seeded reads issued after each refresh: two short (1-day, all
-        sources) range reads and, after the first refresh, one point read
-        (one source's 1m chunks over a day) and one long (whole horizon, one
-        source) range read."""
+        """Seeded reads issued after each refresh: ``SHORT_READS`` short
+        (1-day, all sources) range reads and, after the first refresh, one
+        point read (one source's 1m chunks over a day) and one long (whole
+        horizon, one source) range read."""
         rng = random.Random(self.seed)
         sources = [f"s{i:03d}" for i in range(SOURCES)]
         plan = []
         for i in range(self.batches):
-            reads = [
-                ("short", rng.randrange(HORIZON_DAYS), None),
-                ("short", rng.randrange(HORIZON_DAYS), None),
-            ]
+            reads = [("short", rng.randrange(HORIZON_DAYS), None) for _ in range(SHORT_READS)]
             if i == 0:
-                reads.insert(1, ("point", rng.randrange(HORIZON_DAYS), rng.choice(sources)))
+                reads.insert(0, ("point", rng.randrange(HORIZON_DAYS), rng.choice(sources)))
                 reads.append(("long", 0, rng.choice(sources)))
             plan.append(reads)
         return plan
@@ -371,8 +392,8 @@ class Run:
 
     def maintain(self) -> None:
         """Compaction, retention and downsampling of the 1m tier table.
-        Compaction rewrites only the days the writes and refreshes left in
-        several files, so its work follows the store's layout."""
+        Compaction rewrites the days the two appends left in two files and
+        no refresh rewrote, so its work follows the store's layout."""
         tr, m = self.tracer, self.m
         path = self.paths["1m"]
         t0 = time.perf_counter()
@@ -398,6 +419,10 @@ class Run:
             len(d["downsampled_days"]) == DOWNSAMPLE_BEFORE_DAY - RETAIN_FROM_DAY,
         )
         self.check("maintain.retained_days", r["dropped_days"] == RETAIN_FROM_DAY)
+        self.check(
+            "maintain.compacted_days",
+            len(c["compacted_days"]) == HORIZON_DAYS - self.workload.late_days,
+        )
 
     # -- checks (outside the timed operations) ----------------------------
 
@@ -451,21 +476,24 @@ class Run:
 
     # -- warm-up ----------------------------------------------------------
 
-    def warm_up(self) -> None:
+    def warm_up(self) -> tuple[dict, int]:
         """One untimed pipeline iteration, so the timed one runs on warm JVM
         and Python code. Its closure leg runs on the 1d tier only: the same
         kernel and plan shape as the 1m and 1h legs at a fraction of their
-        cost. Its layer spans are not recorded."""
+        cost. Its layer spans are not recorded. Returns its (persisted)
+        tiers and rolled-up points, which the store cycle writes."""
         enabled, self.tracer.enabled = self.tracer.enabled, False
         tiers = run_tiers(
             self.tokens, with_eigen=True, with_chunks=True, persist=True,
             with_closure=True, horizon_s=HORIZON_S,
         )
         _noop(_union(d["filled"] for d in tiers.values()))
-        _noop(_union(d["fused"] for d in tiers.values()))
+        fused = _union(d["fused"] for d in tiers.values())
+        _noop(fused)
+        points = int(fused.agg(F.sum("n_points")).first()[0])
         _noop(tiers["1d"]["closure"])
-        unpersist(tiers)
         self.tracer.enabled = enabled
+        return tiers, points
 
 
 def _day_names(lo: int, hi: int) -> list[str]:
@@ -475,16 +503,17 @@ def _day_names(lo: int, hi: int) -> list[str]:
     return [(first + timedelta(days=k)).isoformat() for k in range(hi // DAY - lo // DAY + 1)]
 
 
-def end_to_end(run: Run, points: int, wall: float, wall_closure: float) -> dict[str, float]:
+def end_to_end(run: Run, points: int) -> dict[str, float]:
     """The end-to-end figures a run reports, from its measurements."""
     m = run.m
     return {
-        "rolled_up_pps": points / wall,
-        "rolled_up_pps_closure": points / wall_closure,
+        "rolled_up_pps": points / m["iteration_s"],
+        "rolled_up_pps_closure": points / m["iteration_closure_s"],
         "write_pps": m["write_points"] / m["write_s"],
         "read_pps": m["read_points"] / sum(m["read_walls"]),
         "read_p50_s": median(m["short_read_walls"]),
-        "refresh_s": median(m["refresh_walls"]),
+        # the refreshes timed as one region (their summed wall), per refresh
+        "refresh_s": sum(m["refresh_walls"]) / len(m["refresh_walls"]),
         "maintain_s": m["maintain_s"],
         "chunk_bytes_per_point": m["chunk_bytes"] / m["chunk_points"],
         "stored_bytes_per_point": m["write_bytes"] / m["stored_rows"],

@@ -8,10 +8,11 @@ import os
 import threading
 import time
 
-# JVM heap ceiling: the benchmark's inputs need well under it, and the heap
-# is pre-touched at start, so a larger one only costs set-up time and memory
-HEAP_CAP_MB = 2048
-HEAP_FLOOR_MB = 768
+# fixed JVM heap: the benchmark's inputs need well under it, and the package
+# pre-touches the whole heap at start, so a larger one only costs set-up time
+# and memory, and one that followed free memory would make set-up time and
+# peak RSS follow the host's state
+HEAP_MB = 1024
 
 
 def cpu_count() -> int:
@@ -24,11 +25,6 @@ def mem_available_mb() -> int:
             if line.startswith("MemAvailable:"):
                 return int(line.split()[1]) // 1024
     raise RuntimeError("MemAvailable missing from /proc/meminfo")
-
-
-def heap_mb(available_mb: int) -> int:
-    """A quarter of the available memory, clamped to [floor, cap]."""
-    return max(HEAP_FLOOR_MB, min(HEAP_CAP_MB, available_mb // 4))
 
 
 def calibrate(seconds: float = 1.0) -> float:
@@ -59,8 +55,8 @@ def cpu_ticks() -> tuple[int, int]:
     return v[7], sum(v[:8])
 
 
-def _proc_table() -> dict[int, tuple[int, int]]:
-    """pid -> (parent pid, resident pages) of every live process."""
+def _proc_table() -> dict[int, tuple[int, tuple[int, ...]]]:
+    """pid -> (parent pid, /proc/<pid>/statm fields) of every live process."""
     table = {}
     for d in os.listdir("/proc"):
         if not d.isdigit():
@@ -69,14 +65,34 @@ def _proc_table() -> dict[int, tuple[int, int]]:
             with open(f"/proc/{d}/stat") as f:
                 stat = f.read()
             with open(f"/proc/{d}/statm") as f:
-                pages = int(f.read().split()[1])
+                statm = tuple(int(x) for x in f.read().split())
+            ppid = int(stat.rsplit(")", 1)[1].split()[1])
         except (OSError, IndexError, ValueError):
             continue  # the process ended between listing and reading
-        table[int(d)] = (int(stat.rsplit(")", 1)[1].split()[1]), pages)
+        table[int(d)] = (ppid, statm)
     return table
 
 
-def descendants(root: int, table: dict[int, tuple[int, int]] | None = None) -> list[int]:
+def tree_rss_pages(root: int, table: dict[int, tuple[int, tuple[int, ...]]]) -> int:
+    """Resident pages of ``root`` and its descendants. A child with its
+    parent's program size and data size has not diverged from the parent's
+    memory: either a vfork/posix_spawn child that still runs in the parent's
+    address space until its exec (the JVM starts every subprocess that way,
+    and counting one would count the JVM twice) or a fork whose pages are
+    still all shared with the parent. It is not counted again."""
+
+    def same_as_parent(pid: int) -> bool:
+        ppid, (size, _, _, _, _, data, _) = table[pid]
+        parent = table.get(ppid)
+        return parent is not None and (parent[1][0], parent[1][5]) == (size, data)
+
+    pids = [pid for pid in (root, *descendants(root, table)) if pid in table]
+    return sum(table[p][1][1] for p in pids if p == root or not same_as_parent(p))
+
+
+def descendants(
+    root: int, table: dict[int, tuple[int, tuple[int, ...]]] | None = None
+) -> list[int]:
     """Every live process below ``root``."""
     table = _proc_table() if table is None else table
     kids: dict[int, list[int]] = {}
@@ -98,14 +114,20 @@ class RssSampler(threading.Thread):
         super().__init__(daemon=True)
         self.period_s = period_s
         self.peak_bytes = 0
+        self.base_bytes = None  # RSS at mark()
+        self.peak_after_bytes = 0  # peak since mark()
         self._halt = threading.Event()
         self._page = os.sysconf("SC_PAGE_SIZE")
 
-    def _sample(self) -> None:
-        table = _proc_table()
-        pids = [os.getpid(), *descendants(os.getpid(), table)]
-        rss = sum(table[p][1] for p in pids if p in table) * self._page
+    def _sample(self) -> int:
+        rss = tree_rss_pages(os.getpid(), _proc_table()) * self._page
         self.peak_bytes = max(self.peak_bytes, rss)
+        if self.base_bytes is not None:
+            self.peak_after_bytes = max(self.peak_after_bytes, rss)
+        return rss
+
+    def mark(self) -> None:
+        self.base_bytes = self._sample()
 
     def run(self) -> None:
         while not self._halt.is_set():

@@ -1,5 +1,5 @@
 """Arithmetic of the benchmark, kept free of Spark so it can be tested on
-canned inputs: order statistics, span self time, Spark event-log
+canned inputs: the median and the spread, span self time, Spark event-log
 attribution and the failure share.
 """
 
@@ -18,26 +18,6 @@ def median(values: list[float]) -> float:
     s = sorted(values)
     mid = len(s) // 2
     return float(s[mid]) if len(s) % 2 else (s[mid - 1] + s[mid]) / 2.0
-
-
-def percentile(values: list[float], q: float) -> float:
-    """Nearest-rank percentile: the smallest value with at least ``q`` percent
-    of the samples at or below it (no interpolation, so it is always a
-    measured sample)."""
-    if not values:
-        raise ValueError("percentile of no values")
-    if not 0 < q <= 100:
-        raise ValueError(f"percentile rank must be in (0, 100], got {q}")
-    s = sorted(values)
-    return float(s[max(1, math.ceil(q / 100.0 * len(s))) - 1])
-
-
-def highest_supported_percentile(n: int, beyond: int = 10) -> float | None:
-    """The highest percentile that still has ``beyond`` samples above it in a
-    set of ``n`` samples, or None when there are not enough samples."""
-    if n <= beyond:
-        return None
-    return math.floor(100.0 * (n - beyond) / n)
 
 
 def failed_share(attempted: int, failed: int) -> float:

@@ -41,13 +41,11 @@ UNITS = {
 
 
 # spans that run no Spark task: the parent (its tasks belong to its children),
-# plan construction, retention (file-system deletes only) and compaction, which
-# runs tasks only when a day holds several files
+# plan construction and retention (file-system deletes only)
 NO_TASKS = (
     "plans.pipeline.iteration",
     "plans.pipeline.plan",
     "sources.tables.retention",
-    "sources.tables.compact",
 )
 
 
@@ -74,7 +72,7 @@ def _size_session(host) -> dict[str, str]:
     before the package reads it at import."""
     env = {
         "SPARK_GRAFT_CPUS": str(host.cpu_count()),
-        "SPARK_DRIVER_MEM": f"{host.heap_mb(host.mem_available_mb())}m",
+        "SPARK_DRIVER_MEM": f"{host.HEAP_MB}m",
         # every scratch file of the JVM, Spark and Python stays in the checkout
         "TMPDIR": os.path.join(WORK, "tmp"),
         "SPARK_LOCAL_DIRS": os.path.join(WORK, "tmp"),
@@ -156,6 +154,12 @@ def main(argv=None) -> int:
     import host
 
     env = _size_session(host)
+    mem_available_mb = host.mem_available_mb()
+    if mem_available_mb < 2 * host.HEAP_MB:
+        print(
+            f"warning: {mem_available_mb} MiB available for a {host.HEAP_MB} MiB heap",
+            file=sys.stderr,
+        )
     shutil.rmtree(os.path.join(WORK, "tmp"), ignore_errors=True)
     shutil.rmtree(os.path.join(WORK, "store"), ignore_errors=True)
     os.makedirs(os.path.join(WORK, "tmp"))
@@ -163,7 +167,7 @@ def main(argv=None) -> int:
     os.makedirs(reports, exist_ok=True)
 
     import cycle  # imports covsar_spark: fails here when the package is absent
-    from measure import Tracer, failed_share, highest_supported_percentile, median, percentile
+    from measure import Tracer, failed_share, median
 
     if args.workload not in cycle.WORKLOADS:
         print(f"unknown workload {args.workload!r}; one of {sorted(cycle.WORKLOADS)}", file=sys.stderr)
@@ -201,23 +205,21 @@ def main(argv=None) -> int:
         cores = int(env["SPARK_GRAFT_CPUS"])
         spark = get_spark("perfbench", cores=cores, shuffle_partitions=cores, extra_conf=extra_conf)
     run = cycle.Run(
-        spark, fixture, os.path.join(WORK, "store"), args.seed,
+        spark, cycle.WORKLOADS[args.workload], fixture, os.path.join(WORK, "store"), args.seed,
         cycle.n_batches(args.seconds), tracer,
     )
     phases = {"get_spark": time.time()}
     ticks0 = host.cpu_ticks()
     try:
         with tracer.span("session.warmup_iters"):
-            run.warm_up()
+            warm_tiers, points = run.warm_up()
         setup_s = time.time() - t_proc - excluded
+        rss.mark()
         phases["warm_up"] = time.time()
 
-        tiers, points, wall, wall_closure = run.pipeline()
-        if args.trace:
-            cycle.unpersist(tiers)
-            tiers, points = run.traced_pipeline()
-        phases["pipeline"] = time.time()
-        run.write(tiers, points)
+        # the store cycle runs on the warm-up iteration's tiers, and the timed
+        # pipeline iteration after it, on a JVM the store cycle warmed further
+        run.write(warm_tiers, points)
         phases["write"] = time.time()
         run.refresh_and_read()
         phases["refresh_and_read"] = time.time()
@@ -225,6 +227,12 @@ def main(argv=None) -> int:
         phases["check_rebuild"] = time.time()
         run.maintain()
         phases["maintain"] = time.time()
+        cycle.unpersist(warm_tiers)
+        tiers, points = run.pipeline()
+        if args.trace:
+            cycle.unpersist(tiers)
+            tiers, points = run.traced_pipeline()
+        phases["pipeline"] = time.time()
         run.check_pipeline(tiers)
         phases["check_pipeline"] = time.time()
     finally:
@@ -237,11 +245,11 @@ def main(argv=None) -> int:
     calib_post = host.calibrate(0.3)
     m = run.m
     if args.trace:
-        metrics = layer_metrics(tracer, eventlog, wall_closure)
+        metrics = layer_metrics(tracer, eventlog, m["iteration_closure_s"])
         metrics.update(cycle.layer_counters(run))
         tracer.dump(os.path.join(reports, f"{run_id}.spans.jsonl"))
     else:
-        e2e = cycle.end_to_end(run, points, wall, wall_closure)
+        e2e = cycle.end_to_end(run, points)
         e2e["setup_s"] = setup_s
         e2e["peak_rss_mb"] = peak_rss_mb
         metrics = {k: (v, UNITS[k]) for k, v in e2e.items()}
@@ -253,6 +261,9 @@ def main(argv=None) -> int:
         "trace": args.trace,
         "late_batches": run.batches,
         "session_env": {k: env[k] for k in ("SPARK_GRAFT_CPUS", "SPARK_DRIVER_MEM")},
+        "mem_available_mb": mem_available_mb,
+        "rss_after_setup_mb": rss.base_bytes / (1 << 20),
+        "peak_rss_after_setup_mb": rss.peak_after_bytes / (1 << 20),
         "calib_pre_ops_s": calib_pre,
         "calib_post_ops_s": calib_post,
         "steal_share": (ticks1[0] - ticks0[0]) / max(1, ticks1[1] - ticks0[1]),
@@ -266,9 +277,6 @@ def main(argv=None) -> int:
                 "n": len(v),
                 "median": median(v),
                 "samples": v,
-                # the highest percentile with at least ten samples above it
-                "tail": None if (q := highest_supported_percentile(len(v))) is None
-                else {"percentile": q, "value": percentile(v, q)},
             }
             for name, v in (
                 ("short_read", m.get("short_read_walls", [])),

@@ -12,17 +12,15 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from host import heap_mb  # noqa: E402
+from host import tree_rss_pages  # noqa: E402
 from measure import (  # noqa: E402
     Span,
     Tracer,
     attribute_tasks,
     children_share,
     failed_share,
-    highest_supported_percentile,
     median,
     parse_event_log,
-    percentile,
     self_times,
     spread,
 )
@@ -34,24 +32,6 @@ def test_median_odd_even():
     assert median([7]) == 7.0
     with pytest.raises(ValueError):
         median([])
-
-
-def test_percentile_is_a_measured_sample():
-    v = [float(x) for x in range(1, 101)]
-    assert percentile(v, 50) == 50.0
-    assert percentile(v, 90) == 90.0
-    assert percentile(v, 100) == 100.0
-    assert percentile([5.0, 1.0, 3.0], 50) == 3.0
-    assert percentile([5.0, 1.0, 3.0], 1) == 1.0
-    with pytest.raises(ValueError):
-        percentile(v, 0)
-
-
-def test_highest_supported_percentile():
-    assert highest_supported_percentile(10) is None
-    assert highest_supported_percentile(20) == 50
-    assert highest_supported_percentile(100) == 90
-    assert highest_supported_percentile(1000) == 99
 
 
 def test_spread_matches_statistics_quantiles():
@@ -158,7 +138,14 @@ def test_tasks_go_to_the_innermost_span():
     assert sum(v["tasks"] for v in got.values()) == 2
 
 
-def test_heap_fits_available_memory():
-    assert heap_mb(15_000) == 2048
-    assert heap_mb(4_000) == 1000
-    assert heap_mb(1_000) == 768
+def test_tree_rss_counts_a_child_sharing_its_parents_memory_once():
+    # pid -> (parent pid, statm: size, resident, shared, text, lib, data, dt)
+    table = {
+        10: (1, (900, 500, 0, 0, 0, 400, 0)),  # the benchmark's process
+        11: (10, (5000, 3000, 0, 0, 0, 4000, 0)),  # the JVM
+        12: (11, (5000, 3001, 0, 0, 0, 4000, 0)),  # its vfork child before exec
+        13: (11, (300, 100, 0, 0, 0, 200, 0)),  # a Python worker daemon
+        14: (13, (320, 90, 0, 0, 0, 230, 0)),  # a worker that has diverged
+        99: (1, (700, 700, 0, 0, 0, 600, 0)),  # not in the tree
+    }
+    assert tree_rss_pages(10, table) == 500 + 3000 + 100 + 90
