@@ -54,7 +54,7 @@ from pyspark.sql import types as T
 
 from ..functions.stats import chi2_sf
 from .closure import design_matrix
-from .spanbucket import with_span_bucket
+from .spanbucket import span_kernel
 
 MAX_EPOCHS = 20  # files[:20] analogue (covsar/closure_inten.py:73)
 
@@ -327,29 +327,10 @@ def closure_correct(
             ]
         return pd.DataFrame(rows, columns=[f.name for f in schema.fields])
 
-    if fill is not None:
-        if fill != "zero":
-            raise ValueError(f"only fill='zero' is kernel-fillable, got {fill!r}")
-        from .spanfill import dense_span_kernel
+    def batch_fn(keys, grids, series) -> pd.DataFrame:
+        return rows_from(keys, correct_span_batch([v[:max_epochs] for v in series]))
 
-        def batch_fn(keys, grids, series):
-            return rows_from(keys, correct_span_batch([v[:max_epochs] for v in series]))
-
-        return dense_span_kernel(rollup, tier, value_col, batch_fn, schema)
-
-    with_span = with_span_bucket(
-        rollup, tier, spans_per_bucket, F.col(value_col).cast("double").alias("val")
-    )
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys, series = [], []
-        for (src, sp), g in pdf.groupby(["source", "span_s"], sort=True):
-            g = g.sort_values("epoch_s", kind="mergesort")
-            keys.append((src, sp))
-            series.append(g["val"].to_numpy(np.float64)[:max_epochs])
-        return rows_from(keys, correct_span_batch(series))
-
-    return with_span.groupBy("source", "_bkt").applyInPandas(kernel, schema)
+    return span_kernel(rollup, tier, value_col, batch_fn, schema, fill, spans_per_bucket)
 
 
 def corrected_pairs(span_rows: DataFrame) -> DataFrame:

@@ -18,10 +18,9 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..schemas import CHUNK_SCHEMA
-from .spanbucket import with_span_bucket
+from .spanbucket import span_kernel
 from .codecs import decode_dod_many, decode_xor_many, encode_dod_many, encode_xor_many
 
 
@@ -41,55 +40,23 @@ def compress_rollup(
     observed rows shuffled; the dense timestamps are manufactured at the
     encoder, which is also where they compress best.
     """
-    if fill is not None:
-        if fill != "zero":
-            raise ValueError(f"only fill='zero' is kernel-fillable, got {fill!r}")
-        from .spanfill import dense_span_kernel
-
-        def batch_fn(keys, grids, series):
-            return pd.DataFrame(
-                {
-                    "source": [k[0] for k in keys],
-                    "span_s": [k[1] for k in keys],
-                    "n_points": [len(g) for g in grids],
-                    "ts_blob": encode_dod_many(grids),
-                    "val_blob": encode_xor_many(series),
-                },
-                columns=["source", "span_s", "n_points", "ts_blob", "val_blob"],
-            )
-
-        return dense_span_kernel(rollup, tier, value_col, batch_fn, CHUNK_SCHEMA)
-
-    with_span = with_span_bucket(
-        rollup, tier, spans_per_bucket, F.col(value_col).cast("double").alias("val")
-    )
-
-    def enc(pdf: pd.DataFrame) -> pd.DataFrame:
+    def batch_fn(keys, grids, series) -> pd.DataFrame:
         # segmented batch encoders (codecs.encode_*_many): every span of the
-        # Arrow batch is bit-packed in one vectorized pass — byte-identical
-        # to per-span encode_dod/encode_xor (guide §4.2: the per-span loop
-        # paid ~50us of numpy dispatch per span; the tier kernel already
-        # encoded this way, compress_rollup had missed it)
-        keys, ts_list, val_list = [], [], []
-        for (src, sp), g in pdf.groupby(["source", "span_s"], sort=True, observed=True):
-            g = g.sort_values("epoch_s", kind="mergesort")
-            keys.append((src, sp, len(g)))
-            ts_list.append(g["epoch_s"].to_numpy(np.int64))
-            val_list.append(g["val"].to_numpy(np.float64))
-        ts_blobs = encode_dod_many(ts_list)
-        val_blobs = encode_xor_many(val_list)
+        # batch is bit-packed in one vectorized pass — byte-identical to
+        # per-span encode_dod/encode_xor (guide §4.2: the per-span loop paid
+        # ~50us of numpy dispatch per span)
         return pd.DataFrame(
             {
                 "source": [k[0] for k in keys],
                 "span_s": [k[1] for k in keys],
-                "n_points": [k[2] for k in keys],
-                "ts_blob": ts_blobs,
-                "val_blob": val_blobs,
+                "n_points": [len(g) for g in grids],
+                "ts_blob": encode_dod_many(grids),
+                "val_blob": encode_xor_many(series),
             },
             columns=["source", "span_s", "n_points", "ts_blob", "val_blob"],
         )
 
-    return with_span.groupBy("source", "_bkt").applyInPandas(enc, CHUNK_SCHEMA)
+    return span_kernel(rollup, tier, value_col, batch_fn, CHUNK_SCHEMA, fill, spans_per_bucket)
 
 
 def decompress_chunks(chunks: DataFrame) -> DataFrame:

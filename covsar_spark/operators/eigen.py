@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schemas import EIGEN_P, EIGEN_SCHEMA
-from .spanbucket import with_span_bucket
+from .spanbucket import span_kernel, with_span_bucket
 
 _GAUGE_EPS = 1e-12
 
@@ -244,46 +244,20 @@ def eigen_rollup(
     if method not in ("evd", "mle"):
         raise ValueError(f"method must be 'evd' or 'mle', got {method!r}")
 
-    def rows_from(keys, series) -> pd.DataFrame:
+    def batch_fn(keys, grids, series) -> pd.DataFrame:
         res = lagcov_eig_batch(series, p, method)
         return pd.DataFrame(
             {
                 "source": [k[0] for k in keys],
                 "span_s": [k[1] for k in keys],
-                "n_epochs": [k[2] for k in keys],
+                "n_epochs": [len(v) for v in series],
                 "lam": [r[0] for r in res],
                 "tc": [r[1] for r in res],
                 "eig": [r[2] for r in res],
             }
         )
 
-    if fill is not None:
-        if fill != "zero":
-            raise ValueError(f"only fill='zero' is kernel-fillable, got {fill!r}")
-        from .spanfill import dense_span_kernel
-
-        def batch_fn(keys, grids, series):
-            return rows_from(
-                [(s, sp, len(v)) for (s, sp), v in zip(keys, series)], series
-            )
-
-        return dense_span_kernel(rollup, tier, value_col, batch_fn, EIGEN_SCHEMA)
-
-    with_span = with_span_bucket(
-        rollup, tier, spans_per_bucket, F.col(value_col).cast("double").alias("val")
-    )
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        # one pandas frame may hold MANY (source, span) groups when keys are
-        # co-partitioned; groupby locally and run one batched eigh per length
-        keys, series = [], []
-        for (src, sp), g in pdf.groupby(["source", "span_s"], sort=True):
-            g = g.sort_values("epoch_s", kind="mergesort")
-            keys.append((src, sp, len(g)))
-            series.append(g["val"].to_numpy(np.float64))
-        return rows_from(keys, series)
-
-    return with_span.groupBy("source", "_bkt").applyInPandas(kernel, EIGEN_SCHEMA)
+    return span_kernel(rollup, tier, value_col, batch_fn, EIGEN_SCHEMA, fill, spans_per_bucket)
 
 
 # ---------------------------------------------------------------------------

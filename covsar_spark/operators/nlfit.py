@@ -28,9 +28,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from .spanbucket import with_span_bucket
+from .spanbucket import span_kernel
 
 _EPS = 1e-12
 
@@ -127,29 +126,10 @@ def nlfit_rollup(
     ``fill="zero"``: in-kernel dense-grid zero fill from the raw rollup
     (operators/spanfill; output-identical, tests/test_spanfill.py).
     """
-    if fill is not None:
-        if fill != "zero":
-            raise ValueError(f"only fill='zero' is kernel-fillable, got {fill!r}")
-        from .spanfill import dense_span_kernel
+    def batch_fn(keys, grids, series) -> pd.DataFrame:
+        return _nlfit_rows(keys, [v[:max_epochs] for v in series])
 
-        def batch_fn(keys, grids, series):
-            return _nlfit_rows(keys, [v[:max_epochs] for v in series])
-
-        return dense_span_kernel(rollup, tier, value_col, batch_fn, NLFIT_SCHEMA)
-
-    with_span = with_span_bucket(
-        rollup, tier, spans_per_bucket, F.col(value_col).cast("double").alias("val")
-    )
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys, series = [], []
-        for (src, sp), g in pdf.groupby(["source", "span_s"], sort=True):
-            g = g.sort_values("epoch_s", kind="mergesort").head(max_epochs)
-            keys.append((src, sp))
-            series.append(g["val"].to_numpy(np.float64))
-        return _nlfit_rows(keys, series)
-
-    return with_span.groupBy("source", "_bkt").applyInPandas(kernel, NLFIT_SCHEMA)
+    return span_kernel(rollup, tier, value_col, batch_fn, NLFIT_SCHEMA, fill, spans_per_bucket)
 
 
 def _nlfit_rows(keys, series) -> pd.DataFrame:

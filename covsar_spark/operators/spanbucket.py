@@ -1,5 +1,6 @@
-"""Shared preamble for every span-bucketed applyInPandas kernel (eigen,
-complex eigen, closure correction, chunk compression, nonlinear fit).
+"""Span-bucketed applyInPandas kernels over an already-dense tier (eigen,
+complex eigen, closure correction, chunk compression, nonlinear fit): with the
+zero-filled twin (operators/spanfill.py) behind one entry, `span_kernel`.
 
 One definition of the physical grouping so a bucketing change (the round-3
 verdict's pmod->consecutive fix had to touch four copies) can never drift
@@ -10,10 +11,15 @@ independent of retention horizon while the bucket count grows with data.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..schemas import EIGEN_SPAN
+from .spanfill import dense_span_kernel
 
 
 def with_span_bucket(
@@ -43,3 +49,43 @@ def with_span_bucket(
         .select("source", "_bkt", "span_s", "epoch_s", *value_cols)
         .repartition(n_part, "source", "_bkt")
     )
+
+
+def span_kernel(
+    rollup: DataFrame,
+    tier: str,
+    value_col: str,
+    batch_fn: Callable[[list, list[np.ndarray], list[np.ndarray]], pd.DataFrame],
+    schema,
+    fill: str | None = None,
+    spans_per_bucket: int = 64,
+) -> DataFrame:
+    """``batch_fn(keys, grids, series)`` over every (source, eigen-span) of
+    a tier, as in `spanfill.dense_span_kernel`.
+
+    ``fill="zero"``: the rollup is sparse and each span is zero-filled
+    inside the kernel (`spanfill.dense_span_kernel`). ``fill=None``: the
+    rollup is read as it is (typically already gap-filled) through one
+    shuffle on (source, span-bucket); ``batch_fn`` is called once per
+    bucket group with its spans in (source, span_s) order, each span's rows
+    sorted by epoch."""
+    if fill is not None:
+        if fill != "zero":
+            raise ValueError(f"only fill='zero' is kernel-fillable, got {fill!r}")
+        return dense_span_kernel(rollup, tier, value_col, batch_fn, schema)
+
+    with_span = with_span_bucket(
+        rollup, tier, spans_per_bucket, F.col(value_col).cast("double").alias("val")
+    )
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        # one Arrow group holds many spans: re-group per span locally
+        keys, grids, series = [], [], []
+        for (src, sp), g in pdf.groupby(["source", "span_s"], sort=True):
+            g = g.sort_values("epoch_s", kind="mergesort")
+            keys.append((src, sp))
+            grids.append(g["epoch_s"].to_numpy(np.int64))
+            series.append(g["val"].to_numpy(np.float64))
+        return batch_fn(keys, grids, series)
+
+    return with_span.groupBy("source", "_bkt").applyInPandas(kernel, schema)

@@ -1,32 +1,26 @@
-"""Single-shuffle tier kernel (zero-fill fast path).
+"""The tier kernel: gap-fill + eigen + codec of one tier in ONE exchange.
 
-The relational tier pipeline costs three exchanges per tier: the gap-fill
-grid join, plus the kernel shuffle, and re-materializes the dense grid
-through a sort-merge join. This operator collapses gap-fill + eigen + codec
-into ONE exchange:
+`tier_rows` is the eigen + codec body run on `spanfill.dense_span_kernel`:
+for each zero-filled span it runs the batched lag-cov eigh over the token
+counts and the segmented Gorilla/DoD encode of (epochs, rate), and emits
+one span row. With ``emit_points`` the row also carries the filled points
+as parallel array columns, so `split_outputs` recovers the dense tier
+table JVM-side with one `explode` and no further shuffle. The streamed twin
+(streaming/span_stream.py) runs the same body on spans it closes.
 
-    sentinels (one row per (source, span) in the source's range, carrying
-    the per-source [lo, hi] grid bounds)
-      UNION data rows
-      -> repartition(source, span) -> sortWithinPartitions -> mapInPandas
+The kernel fills with the ``zero`` policy only. Given an already dense tier
+(ffill/linear/cross, operators/gapfill.py) it fills nothing and just runs
+the body.
 
-The kernel reindexes each span to its dense tier grid in numpy (zero-fill,
-`filled` lineage), then runs the batched eigh + segmented Gorilla/DoD encode,
-emitting span rows that carry the filled points as an array column — the
-dense tier table is recovered JVM-side with one `explode`, no further
-shuffle. Sentinels guarantee even fully-empty spans (a gap wider than a whole
-span) are emitted.
-
-ONLY valid for the `zero` fill policy: ffill/linear need cross-span
-continuity per source, which a span-partitioned kernel cannot see — those
-use the relational `operators/gapfill.py` path.
-
-Exactness: output rows must equal the relational gapfill + eigen_rollup +
-compress_rollup results bit-for-bit (tests/test_tier_kernel.py); the series
-fed to eigh is the same canonical zero-filled, epoch-sorted grid.
+Exactness: output rows equal the relational gapfill + eigen_rollup +
+compress_rollup results bit for bit (tests/test_tier_kernel.py,
+tests/test_pipeline_oracle.py): eigh sees the same canonical zero-filled,
+epoch-sorted series.
 """
 
 from __future__ import annotations
+
+import functools
 
 import numpy as np
 import pandas as pd
@@ -34,9 +28,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..schemas import EIGEN_P, EIGEN_SPAN, TIERS
+from ..schemas import EIGEN_P
 from .codecs import encode_dod_many, encode_xor_many
 from .eigen import lagcov_eig_batch
+from .spanfill import dense_span_kernel
 
 # filled points ride as parallel array columns (one numpy array per span row)
 # — zero per-point Python; the dense tier table is arrays_zip+explode'd back
@@ -68,87 +63,42 @@ _META_COLS = [
 ]
 TIER_SCHEMA_META = T.StructType([f for f in TIER_SCHEMA.fields if f.name in _META_COLS])
 
+# the rollup columns the body reads and the value each carries at a gap, in
+# `tier_rows` order; the kernel appends the `filled` lineage flag
+TIER_GAPS = (
+    ("token_count", 0),
+    ("n_docs", 0),
+    ("max_tok", np.nan),
+    ("min_tok", np.nan),
+    # observed epochs carry the INPUT rollup's rate verbatim (not a
+    # tok/tier_s recompute, which would diverge for a pre-rounded rate)
+    ("rate", 0.0),
+)
 
-def _process(pdf: pd.DataFrame, tier_s: int, span: int, p: int) -> pd.DataFrame:
-    src = pdf["source"].to_numpy()
-    spn = pdf["span_s"].to_numpy(np.int64)
-    sentinel = pdf["is_sentinel"].to_numpy(bool)
-    eps = pdf["epoch_s"].to_numpy(np.int64)
-    lo = pdf["lo"].to_numpy()
-    hi = pdf["hi"].to_numpy()
-    tc_ = pdf["token_count"].to_numpy()
-    nd_ = pdf["n_docs"].to_numpy()
-    mx_ = pdf["max_tok"].to_numpy()
-    mn_ = pdf["min_tok"].to_numpy()
-    rt_ = pdf["rate"].to_numpy()
 
-    change = (spn[1:] != spn[:-1]) | (src[1:] != src[:-1])
-    starts = np.concatenate([[0], np.flatnonzero(change) + 1, [len(spn)]])
-
-    out_src, out_spn, rows_meta = [], [], []
-    series, ts_list, cv_list = [], [], []
-    p_tok, p_docs, p_max, p_min, p_filled = [], [], [], [], []
-    for a, b in zip(starts[:-1], starts[1:]):
-        # sentinel sorts first within the span (is_sentinel desc in sort key)
-        s_lo, s_hi = int(lo[a]), int(hi[a])
-        sp = int(spn[a])
-        g0 = max(sp, s_lo)
-        g1 = min(sp + span, s_hi + tier_s)
-        grid = np.arange(g0, g1, tier_s, dtype=np.int64)
-        k = len(grid)
-        tok = np.zeros(k, dtype=np.int64)
-        ndc = np.zeros(k, dtype=np.int64)
-        mxv = np.full(k, np.nan)
-        mnv = np.full(k, np.nan)
-        filled = np.ones(k, dtype=bool)
-        # zero-filled epochs carry rate 0; observed epochs carry the INPUT
-        # rollup's rate column verbatim (not a tok/tier_s recompute, which
-        # would silently diverge for rollups whose rate is e.g. pre-rounded)
-        rate = np.zeros(k, dtype=np.float64)
-        d0 = a + (1 if sentinel[a] else 0)
-        if b > d0:
-            idx = (eps[d0:b] - g0) // tier_s
-            tok[idx] = tc_[d0:b]
-            ndc[idx] = nd_[d0:b]
-            mxv[idx] = mx_[d0:b]
-            mnv[idx] = mn_[d0:b]
-            rate[idx] = rt_[d0:b]
-            filled[idx] = False
-        out_src.append(src[a])
-        out_spn.append(sp)
-        series.append(tok.astype(np.float64))
-        ts_list.append(grid)
-        cv_list.append(rate)
-        p_tok.append(tok)
-        p_docs.append(ndc)
-        p_max.append(mxv)
-        p_min.append(mnv)
-        p_filled.append(filled)
-        rows_meta.append(k)
-
-    res = lagcov_eig_batch(series, p)
-    ts_blobs = encode_dod_many(ts_list)
-    val_blobs = encode_xor_many(cv_list)
-    return pd.DataFrame(
-        {
-            "source": out_src,
-            "span_s": out_spn,
-            "n_epochs": np.array(rows_meta, dtype=np.int32),
-            "lam": [r[0] for r in res],
-            "tc": [r[1] for r in res],
-            "eig": [r[2] for r in res],
-            "n_points": np.array(rows_meta, dtype=np.int32),
-            "ts_blob": ts_blobs,
-            "val_blob": val_blobs,
-            "p_epoch": ts_list,
-            "p_tok": p_tok,
-            "p_docs": p_docs,
-            "p_max": p_max,
-            "p_min": p_min,
-            "p_rate": cv_list,
-            "p_filled": p_filled,
-        }
-    )
+def tier_rows(keys, grids, tok, docs, mx, mn, rate, filled, p=EIGEN_P, emit_points=True):
+    """Span rows of a batch of filled spans: eigen over the token counts,
+    DoD/XOR blobs over (grid, rate), and with ``emit_points`` the filled
+    points themselves."""
+    res = lagcov_eig_batch([t.astype(np.float64) for t in tok], p)
+    n = np.fromiter(map(len, grids), np.int32, len(grids))
+    out = {
+        "source": [k[0] for k in keys],
+        "span_s": [k[1] for k in keys],
+        "n_epochs": n,
+        "lam": [r[0] for r in res],
+        "tc": [r[1] for r in res],
+        "eig": [r[2] for r in res],
+        "n_points": n,
+        "ts_blob": encode_dod_many(grids),
+        "val_blob": encode_xor_many(rate),
+    }
+    if emit_points:
+        out.update(
+            p_epoch=grids, p_tok=tok, p_docs=docs, p_max=mx, p_min=mn, p_rate=rate,
+            p_filled=filled,
+        )
+    return pd.DataFrame(out)
 
 
 def tier_kernel(
@@ -159,82 +109,23 @@ def tier_kernel(
     ``emit_points=False`` drops the point-array columns from the Arrow
     return path when no consumer materializes the dense tier (the retention
     store is the compressed chunks; dense rows decode on demand)."""
-    tier_s = TIERS[tier]
-    span = EIGEN_SPAN[tier]
-    sess = rollup.sparkSession
-    n_part = int(sess.conf.get("spark.sql.shuffle.partitions", "32"))
-
-    bounds = rollup.groupBy("source").agg(
-        F.min("epoch_s").alias("lo"), F.max("epoch_s").alias("hi")
-    )
-    sentinels = bounds.select(
-        "source",
-        F.explode(
-            F.sequence((F.floor(F.col("lo") / span) * span).cast("long"), "hi", F.lit(span))
-        ).alias("span_s"),
-        "lo",
-        "hi",
-    ).select(
-        "source",
-        "span_s",
-        F.lit(True).alias("is_sentinel"),
-        F.col("span_s").alias("epoch_s"),  # sorts before any data via is_sentinel
-        "lo",
-        "hi",
-        F.lit(None).cast("long").alias("token_count"),
-        F.lit(None).cast("long").alias("n_docs"),
-        F.lit(None).cast("int").alias("max_tok"),
-        F.lit(None).cast("int").alias("min_tok"),
-        F.lit(None).cast("double").alias("rate"),
-    )
-    data = rollup.select(
-        "source",
-        (F.floor(F.col("epoch_s") / span) * span).cast("long").alias("span_s"),
-        F.lit(False).alias("is_sentinel"),
-        "epoch_s",
-        F.lit(None).cast("long").alias("lo"),
-        F.lit(None).cast("long").alias("hi"),
-        "token_count",
-        "n_docs",
-        "max_tok",
-        "min_tok",
-        F.col("rate").cast("double").alias("rate"),
-    )
-    prep = (
-        sentinels.unionByName(data)
-        .repartition(n_part, "source", "span_s")
-        .sortWithinPartitions(
-            "source", "span_s", F.col("is_sentinel").desc(), "epoch_s"
-        )
+    fills = [(name, name, gap) for name, gap in TIER_GAPS] + [("filled", None, True)]
+    return dense_span_kernel(
+        rollup,
+        tier,
+        fills,
+        functools.partial(tier_rows, p=p, emit_points=emit_points),
+        TIER_SCHEMA if emit_points else TIER_SCHEMA_META,
     )
 
-    cols = None if emit_points else _META_COLS
 
-    def kernel(it):
-        carry: pd.DataFrame | None = None
-        for pdf in it:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if len(pdf) == 0:
-                continue
-            src = pdf["source"].to_numpy()
-            spn = pdf["span_s"].to_numpy()
-            diff = (spn != spn[-1]) | (src != src[-1])
-            last_start = int(np.flatnonzero(diff)[-1] + 1) if diff.any() else 0
-            carry = pdf.iloc[last_start:]
-            head = pdf.iloc[:last_start]
-            if len(head):
-                r = _process(head, tier_s, span, p)
-                yield r if cols is None else r[cols]
-        if carry is not None and len(carry):
-            r = _process(carry, tier_s, span, p)
-            yield r if cols is None else r[cols]
-
-    return prep.mapInPandas(kernel, TIER_SCHEMA if emit_points else TIER_SCHEMA_META)
-
-
-def split_outputs(k: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """kernel output -> (filled tier table, eigen table, chunk table)."""
+def split_outputs(k: DataFrame) -> tuple[DataFrame | None, DataFrame, DataFrame]:
+    """kernel output -> (filled tier table, eigen table, chunk table); the
+    filled table is None when the kernel emitted no points."""
+    eig = k.select("source", "span_s", "n_epochs", "lam", "tc", "eig")
+    chunks = k.select("source", "span_s", "n_points", "ts_blob", "val_blob")
+    if "p_epoch" not in k.columns:
+        return None, eig, chunks
     zipped = F.arrays_zip("p_epoch", "p_tok", "p_docs", "p_max", "p_min", "p_rate", "p_filled")
     int_or_null = lambda c: F.when(~F.isnan(c), c.cast("int"))  # noqa: E731 — NaN marks a gap
     filled = k.select("source", F.explode(zipped).alias("pt")).select(
@@ -247,6 +138,4 @@ def split_outputs(k: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
         F.col("pt.p_rate").alias("rate"),
         F.col("pt.p_filled").alias("filled"),
     )
-    eig = k.select("source", "span_s", "n_epochs", "lam", "tc", "eig")
-    chunks = k.select("source", "span_s", "n_points", "ts_blob", "val_blob")
     return filled, eig, chunks

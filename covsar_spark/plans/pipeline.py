@@ -3,11 +3,14 @@
 quality -> partitioned sink), re-expressed as:
 
     tokens -> event time -> 1m rollup -> cascade 1h/1d
-           -> gap-fill (zero) -> eigen kernel per tier
-           -> compressed chunk tables
+           -> per tier: tier kernel (zero-fill + eigen + codec, one exchange)
+           -> filled tier, eigen rows, compressed chunks
 
 One raw scan; every tier derives from the previous (continuous aggregates);
-the 1m rollup is persisted because three consumers branch from it.
+each rollup is persisted because several consumers branch from it. The
+``zero`` policy fills inside the span kernel (operators/spanfill.py); the
+other policies need continuity across spans, so they densify relationally
+(operators/gapfill.py) and hand the dense tier to the same kernel.
 """
 
 from __future__ import annotations
@@ -20,76 +23,62 @@ from ..operators.compress import compress_rollup
 from ..operators.eigen import eigen_rollup
 from ..operators.gapfill import gapfill
 from ..operators.rollup import cascade, rollup_tokens, with_event_time
+from ..operators.tier_kernel import split_outputs, tier_kernel
 from ..schemas import TIERS
 
 
 def run_tiers(
     tokens: DataFrame,
     policy: str = "zero",
-    salt_buckets: int = 0,
     with_eigen: bool = True,
     with_chunks: bool = False,
     with_filled: bool = True,
     with_closure: bool = False,
     persist: bool = True,
-    persist_fused: bool = True,
     horizon_s: int | None = None,
-    kernel_path: str = "tier",  # "tier" = single-shuffle sentinel kernel;
-    # "fused" = relational gapfill + repartition-sorted eigen/codec kernel
 ) -> dict[str, dict[str, DataFrame]]:
-    """Returns per tier: {"rollup", "filled", "eigen"?, "chunks"?, "closure"?}."""
+    """Returns per tier: {"rollup", "filled"?, "eigen"?, "chunks"?,
+    "fused"?, "closure"?}.
+
+    With eigen and chunks, "fused" is the tier kernel's span table, which
+    "eigen" and "chunks" select from. It is persisted (with ``persist``)
+    only when the filled tier is wanted too, since then several outputs
+    read it; a single consumer such as a chunk write streams through.
+    ``with_filled=False`` drops "filled" from the ``zero`` path and keeps
+    the point arrays out of the kernel's Arrow return path."""
     from ..schemas import HORIZON_S
 
     ts = with_event_time(tokens, horizon_s or HORIZON_S)
     out: dict[str, dict[str, DataFrame]] = {}
     finer: DataFrame | None = None
     for tier in TIERS:
-        roll = rollup_tokens(ts, tier, salt_buckets) if finer is None else cascade(finer, tier)
+        roll = rollup_tokens(ts, tier) if finer is None else cascade(finer, tier)
         if persist:
             roll = roll.persist(StorageLevel.MEMORY_AND_DISK)
         d: dict[str, DataFrame] = {"rollup": roll}
-        if policy == "zero" and with_eigen and with_chunks and kernel_path == "tier":
-            # single-shuffle fast path: gap-fill + eigen + codec in one
-            # kernel pass (operators/tier_kernel.py); bit-identical to the
-            # relational path (tests/test_tier_kernel.py)
-            from ..operators.tier_kernel import split_outputs, tier_kernel
-
-            k = tier_kernel(roll, tier, emit_points=with_filled)
-            if persist and persist_fused:
-                # only when several outputs are materialized separately —
-                # a single consumer (e.g. chunk write) should stream through
-                k = k.persist(StorageLevel.MEMORY_AND_DISK)
-            if with_filled:
-                filled, eig, chunks = split_outputs(k)
-                d.update({"fused": k, "filled": filled, "eigen": eig, "chunks": chunks})
-            else:
-                d.update(
-                    {
-                        "fused": k,
-                        "eigen": k.select("source", "span_s", "n_epochs", "lam", "tc", "eig"),
-                        "chunks": k.select("source", "span_s", "n_points", "ts_blob", "val_blob"),
-                    }
-                )
-        else:
+        # zero-fill happens inside the tier kernel; other policies (or a
+        # missing eigen/chunk output) densify relationally first
+        kernel_fills = policy == "zero" and with_eigen and with_chunks
+        if not kernel_fills:
             filled = gapfill(roll, tier, policy)
             if persist:
                 # multiple consumers branch from the gap-filled tier —
                 # without this the grid join + fill windows re-execute each
                 filled = filled.persist(StorageLevel.MEMORY_AND_DISK)
             d["filled"] = filled
-            if with_eigen and with_chunks:
-                from ..operators.fused import eigen_chunks
-
-                fused = eigen_chunks(filled, tier)
-                if persist:
-                    fused = fused.persist(StorageLevel.MEMORY_AND_DISK)
-                d["fused"] = fused
-                d["eigen"] = fused.select("source", "span_s", "n_epochs", "lam", "tc", "eig")
-                d["chunks"] = fused.select("source", "span_s", "n_points", "ts_blob", "val_blob")
-            elif with_eigen:
+            if with_eigen and not with_chunks:
                 d["eigen"] = eigen_rollup(filled, tier)
-            elif with_chunks:
+            elif with_chunks and not with_eigen:
                 d["chunks"] = compress_rollup(filled, tier)
+        if with_eigen and with_chunks:
+            src = roll if kernel_fills else d["filled"]
+            k = tier_kernel(src, tier, emit_points=kernel_fills and with_filled)
+            if persist and with_filled:
+                k = k.persist(StorageLevel.MEMORY_AND_DISK)
+            filled, d["eigen"], d["chunks"] = split_outputs(k)
+            d["fused"] = k
+            if filled is not None:
+                d["filled"] = filled
         if with_closure:
             # the defining CovSAR step as a pipeline stage: per-(source,
             # eigen-span) closure evaluation + fit + least-norm correction +

@@ -11,9 +11,43 @@ import os
 
 from pyspark.sql import SparkSession
 
-# fixed driver heap (see the extraJavaOptions comment in get_spark);
-# overridable for memory-constrained or larger-scale runs
-_DRIVER_MEM = os.environ.get("SPARK_DRIVER_MEM", "16g")
+_MAX_HEAP_MB = 16 << 10
+_CGROUP_LIMITS = (
+    "/sys/fs/cgroup/memory.max",  # cgroup v2
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # cgroup v1
+)
+
+
+def default_heap(
+    meminfo: str = "/proc/meminfo", cgroup_limits: tuple[str, ...] = _CGROUP_LIMITS
+) -> str:
+    """The fixed driver heap: half of what this host can still give (the
+    smaller of ``MemAvailable`` and the cgroup memory limit), capped at
+    16g. The heap is pre-touched at start-up (see the extraJavaOptions
+    comment in get_spark), so a heap larger than free memory gets the JVM
+    killed before the session exists."""
+    avail_mb = None
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    avail_mb = int(line.split()[1]) >> 10
+                    break
+    except OSError:
+        pass
+    for path in cgroup_limits:
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():  # "max" (v2) means no limit
+            limit_mb = int(raw) >> 20
+            avail_mb = limit_mb if avail_mb is None else min(avail_mb, limit_mb)
+    if avail_mb is None:
+        return f"{_MAX_HEAP_MB}m"
+    return f"{max(512, min(_MAX_HEAP_MB, avail_mb // 2))}m"
+
 
 
 def _shuffle_dir() -> str:
@@ -75,6 +109,9 @@ def get_spark(
         cores = (int(env_cpus) if env_cpus else 0) or os.cpu_count() or 4
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
+    # fixed driver heap; SPARK_DRIVER_MEM overrides it for memory-constrained
+    # or larger-scale runs
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM") or default_heap()
 
     # Pin BLAS/OMP to one thread per Python worker: N workers x M BLAS
     # threads oversubscribes the box and anti-scales the eigh/matmul kernels
@@ -110,7 +147,7 @@ def get_spark(
         # bound), large enough to amortize dispatch (CovSAR chunks its eigh
         # batches for the same reason, library.py:121-127)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-        .config("spark.driver.memory", _DRIVER_MEM)
+        .config("spark.driver.memory", driver_mem)
         # measured: G1 inflates executor CPU up to 5x under 8+ concurrent
         # tasks in one local JVM (allocation-heavy shuffle+Arrow paths);
         # throughput-oriented ParallelGC cut the flagship wall ~20%.
@@ -121,13 +158,14 @@ def get_spark(
         # A FIXED heap pre-touched at startup removes them: an 8-query A/B
         # read 78.4s (lazy 48g) vs 57.1s (pre-touched 16g) with per-query
         # spread collapsing (repetition_stats 1.3/3.7/5.3 -> 1.2/0.9/0.9).
-        # 16g default keeps the pre-touch inside normal session startup
-        # (21.6s vs 21.2s); a 48g pre-touch would add ~75s per session.
+        # A heap of at most 16g keeps the pre-touch inside normal session
+        # startup (21.6s vs 21.2s); a 48g pre-touch would add ~75s per
+        # session. The default is sized to free memory (default_heap).
         # On a real cluster the analogue is the standard fixed-size
         # executor heap — lazy heap growth is a local-mode artifact.
         .config(
             "spark.driver.extraJavaOptions",
-            f"-XX:+UseParallelGC -Xms{_DRIVER_MEM} -XX:+AlwaysPreTouch",
+            f"-XX:+UseParallelGC -Xms{driver_mem} -XX:+AlwaysPreTouch",
         )
         # local mode: shuffle through tmpfs when present (a real cluster sets
         # its own local dirs; this only affects the sandbox benchmarks)

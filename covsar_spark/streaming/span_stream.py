@@ -9,10 +9,11 @@ append-mode output of `streaming/rollup_stream.py` persisted to a tier
 table, or any rollup source). Rows are grouped by (source, eigen-span) in
 `applyInPandasWithState`; state accumulates the span's observed epochs, and
 an event-time timeout set at span end fires once the watermark passes it —
-only then does the span run the EXACT batch kernel (`tier_kernel._process`:
-dense zero-filled grid -> batched lag-cov eigh -> Gorilla XOR + DoD
-encode) and emit its TIER_SCHEMA_META row. No span is ever computed twice
-and none is computed early: emission is append-mode by construction.
+only then is the span zero-filled (`spanfill.fill_spans`) and run through
+the batch kernel's own body (`tier_kernel.tier_rows`: batched lag-cov eigh
+-> Gorilla XOR + DoD encode), emitting its TIER_SCHEMA_META row. No span is
+ever computed twice and none is computed early: emission is append-mode by
+construction.
 
 Declared streamed semantics vs the batch `tier_kernel` (both pinned in
 tests/test_streaming_span.py):
@@ -33,7 +34,7 @@ tests/test_streaming_span.py):
   (tests/test_streaming_span.py::test_heartbeat_emits_empty_interior_spans).
   Corollary: feed this operator RAW rollups (filled=False), exactly like
   the batch `tier_kernel` — pre-gap-filled rows are treated as markers,
-  because the kernel re-derives gap lineage on its own dense grid.
+  because the fill re-derives gap lineage on its own dense grid.
 
 Scale: state per in-flight group is O(span/tier) epochs (60 for 1m/1h) of
 six scalars, bounded by construction; groups die at watermark passage, so
@@ -53,7 +54,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
-from ..operators.tier_kernel import TIER_SCHEMA_META, _META_COLS, _process
+from ..operators.spanfill import fill_spans
+from ..operators.tier_kernel import TIER_GAPS, TIER_SCHEMA_META, tier_rows
 from ..schemas import EIGEN_P, EIGEN_SPAN, ROLLUP_SCHEMA, TIERS
 
 # per-span accumulator: parallel arrays over observed epochs (append-only;
@@ -73,39 +75,24 @@ SPAN_STATE_SCHEMA = T.StructType(
 
 
 def _finalize(source: str, span_s: int, tier_s: int, span: int, p: int, st) -> pd.DataFrame:
-    """Run the batch kernel for one closed span: sentinel row pinning the
-    dense-span grid bounds + the span's observed rows, epoch-sorted —
-    exactly the layout `tier_kernel`'s sort produces, so `_process` is
-    reused verbatim and parity is by construction."""
-    epochs, tok, docs, mx, mn, rate = (np.asarray(a) for a in st)
+    """Run the tier kernel body on one closed span: its observed epochs
+    (the last row per epoch wins, so a re-finalized upstream window
+    replaces the first) zero-filled onto the FULL span grid. A
+    heartbeat-only span has no observations and yields the all-gap grid,
+    the batch kernel's empty-span row."""
+    epochs = np.asarray(st[0], dtype=np.int64)
     order = np.argsort(epochs, kind="stable")
-    # keep the LAST row per epoch (a re-finalized upstream window wins);
-    # a heartbeat-only span has ZERO observations — sentinel-only input
-    # yields the full zero-filled grid, the batch empty-span layout
-    epochs = epochs[order]
-    keep = (
-        np.concatenate([epochs[1:] != epochs[:-1], [True]])
-        if len(epochs)
-        else np.zeros(0, dtype=bool)
+    srt = epochs[order]
+    sel = order[np.append(srt[1:] != srt[:-1], True)] if len(srt) else order
+    grids, cols = fill_spans(
+        np.array([span_s], dtype=np.int64),
+        np.array([span // tier_s]),
+        tier_s,
+        np.zeros(len(sel), dtype=np.int64),
+        epochs[sel],
+        [(np.asarray(a)[sel], gap) for a, (_, gap) in zip(st[1:], TIER_GAPS)] + [(None, True)],
     )
-    sel = order[keep]
-    n = 1 + len(sel)
-    pdf = pd.DataFrame(
-        {
-            "source": np.repeat(source, n),
-            "span_s": np.repeat(np.int64(span_s), n),
-            "is_sentinel": np.concatenate([[True], np.zeros(len(sel), dtype=bool)]),
-            "epoch_s": np.concatenate([[span_s], np.asarray(st[0])[sel]]),
-            "lo": np.repeat(np.int64(span_s), n),
-            "hi": np.repeat(np.int64(span_s + span - tier_s), n),
-            "token_count": np.concatenate([[0], tok[sel]]),
-            "n_docs": np.concatenate([[0], docs[sel]]),
-            "max_tok": np.concatenate([[0], mx[sel]]),
-            "min_tok": np.concatenate([[0], mn[sel]]),
-            "rate": np.concatenate([[0.0], rate[sel]]),
-        }
-    )
-    return _process(pdf, tier_s, span, p)[_META_COLS]
+    return tier_rows([(source, span_s)], grids, *cols, p=p, emit_points=False)
 
 
 def make_span_updater(tier: str, p: int = EIGEN_P):

@@ -51,7 +51,7 @@ tokens.count()  # warm scan outside the timed region
 
 def one_run():
     tiers = run_tiers(tokens, with_eigen=True, with_chunks=True, with_filled=False,
-                      persist=True, persist_fused=False, horizon_s=horizon_s)
+                      persist=True, horizon_s=horizon_s)
     # ONE action: the kernel output carries eigen + blobs + per-span point
     # counts; the dense filled table stays lazy (the retention store is the
     # compressed chunks — dense rows decode on demand). points = sum(n_points).

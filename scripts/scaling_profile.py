@@ -63,7 +63,7 @@ tokens.count()
 
 def one_run():
     tiers = run_tiers(tokens, with_eigen=True, with_chunks=True, with_filled=False,
-                      persist=True, persist_fused=False, horizon_s=horizon_s)
+                      persist=True, horizon_s=horizon_s)
     fused_all = reduce(lambda a, b: a.unionByName(b), [d["fused"] for d in tiers.values()])
     return fused_all.select(F.sum("n_points")).collect()[0][0]
 

@@ -10,7 +10,9 @@ from covsar_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("covsar_spark_tests", cores=8, shuffle_partitions=8)
+    # cores from $SPARK_GRAFT_CPUS (else every local core), as get_spark
+    # sizes any session
+    s = get_spark("covsar_spark_tests", shuffle_partitions=8)
     yield s
 
 
